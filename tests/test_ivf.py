@@ -434,7 +434,9 @@ def test_tune_candidates_meets_target_or_reports_ceiling(
         index.tune_candidates(q, tier="sq8")
 
 
-@pytest.mark.parametrize("tier", ["sq8", "sq4", "bq", "cascade"])
+@pytest.mark.parametrize(
+    "tier", ["sq8", "sq4", "bq", "cascade", "pq", "prefix", "prefix_pca"]
+)
 def test_cosine_search_through_tiers(spark, sf_dir, embeddings, tier):
     """The cosine wrapper's candidate stage can run through any serving
     tier; at full probe (with unbounded top-C for the lossy tiers) the

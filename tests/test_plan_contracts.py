@@ -438,11 +438,25 @@ def test_source_overlap_joins_on_shingle_never_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in sketch  # the S-row matrix, bounded
 
 
+def _sidecar_scan_pruned(plan: str, column: str) -> bool:
+    """True when every parquet scan reading the sidecar-only ``column``
+    carries a centroid_id partition filter (the plan string truncates
+    long filter lists and scan paths, so the scan is found by its
+    column and only the filter's head is checked)."""
+    import re
+
+    scans = [
+        line for line in plan.splitlines()
+        if "FileScan parquet" in line and re.search(rf"[\[,]{column}#\d", line)
+    ]
+    return bool(scans) and all(
+        re.search(r"PartitionFilters: \[\s*centroid_", line) for line in scans
+    )
+
+
 def test_prefix_pca_sidecar_read_prunes_partitions(spark, sf_dir):
     """The rotated sidecar scan must prune to the probed cells (the
     tier rides the same centroid_id partitioning as the float cells)."""
-    import numpy as np
-
     from vector_search_engine_spark.operators import ivf as ivf_mod
 
     spark.catalog.clearCache()
@@ -451,12 +465,31 @@ def test_prefix_pca_sidecar_read_prunes_partitions(spark, sf_dir):
     q = knn_ops.make_queries(emb)
     plan = _executed_plan(idx.search_prefix_pca(q, k=10, nprobe=2))
     assert "CartesianProduct" not in plan
-    # partition filter on the sidecar scan: centroid_id INSET (the plan
-    # string truncates long filter lists, so assert the filter's head)
-    import re
+    assert _sidecar_scan_pruned(plan, "rotvec"), (
+        "sidecar scan lost its centroid_id partition filter"
+    )
 
-    m = re.search(r"PartitionFilters: \[\s*centroid_", plan)
-    assert m, "sidecar scan lost its centroid_id partition filter"
+
+@pytest.mark.parametrize(
+    "method, column",
+    [("search_sq8", "lo"), ("search_pq", "resid"), ("search_bq", "dim")],
+)
+def test_quantized_sidecar_reads_prune_partitions(spark, sf_dir, method, column):
+    """Every code-sidecar scan goes through the shared memoized cell
+    reader and must still read only the probed centroid_id cells —
+    also on a warm search, which reuses the memoized DataFrame."""
+    from vector_search_engine_spark.operators import ivf as ivf_mod
+
+    spark.catalog.clearCache()
+    emb = load_table(spark, sf_dir, "embeddings")
+    idx = ivf_mod.build_or_load(spark, sf_dir)
+    q = knn_ops.make_queries(emb)
+    for _ in range(2):
+        plan = _executed_plan(getattr(idx, method)(q, k=10, nprobe=2))
+        assert "CartesianProduct" not in plan
+        assert _sidecar_scan_pruned(plan, column), (
+            f"{method}: sidecar scan lost its centroid_id partition filter"
+        )
 
 
 def test_k_core_rounds_aggregate_before_shuffle(spark, sf_dir):

@@ -177,3 +177,125 @@ def test_asof_search_through_quantized_tiers(spark, embeddings, engine3):
     cur_pq = rows(idx.search_pq(q, k=10, nprobe=np_full))
     assert cur_pq == rows(idx.search(q, k=10, nprobe=np_full))
     assert any(t[1] >= 200 for t in cur_pq) or cur_pq != asof_pq
+
+
+def test_broadcast_tiers_share_one_asof_pipeline(spark, embeddings, tmp_path):
+    """The six broadcast tiers run one probed-search pipeline: at a
+    partial nprobe, with an exclude_ids DataFrame, a predicate and an
+    as-of snapshot all at once — the snapshot given both as "prev" and
+    as its manifest_at dict — every lossless tier returns search()'s
+    rows exactly, and bq returns exact distances over unexcluded,
+    qualifying ids from its query's probed cells of the pinned view."""
+    import numpy as np
+
+    eng = VectorEngine.create(
+        embeddings.filter(F.col("vec_id") < 300),
+        str(tmp_path / "eng"),
+        n_centroids=8,
+        extra_cols=("label",),
+    )
+    idx = eng.index
+    eng.insert(embeddings.filter(F.col("vec_id") >= 300))
+    assert eng.compact() > 0
+    q = knn_ops.make_queries(embeddings.filter(F.col("vec_id") < 300), n=6)
+    kw = dict(
+        k=10,
+        nprobe=3,
+        exclude_ids=embeddings.select("vec_id").filter(F.col("vec_id") % 5 == 0),
+        predicate=F.col("label") < 6,
+    )
+    prev = idx.manifest_at("prev")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    want = rows(idx.search(q, snapshot="prev", **kw))
+    assert want and all(t[1] < 300 and t[1] % 5 for t in want)
+    # the ids/labels/vectors of the pinned view, and each query's cells
+    view = {
+        r.vec_id: (r.centroid_id, r.label, np.asarray(r.embedding, np.float64))
+        for r in idx.vectors(snapshot=prev).collect()
+    }
+    qrows = q.collect()
+    qvec = {r.qid: np.asarray(r.query, np.float64) for r in qrows}
+    probed = set(
+        idx.probe_pairs(
+            np.array([r.qid for r in qrows], dtype=np.int64),
+            np.array([r.query for r in qrows], dtype=np.float32),
+            3,
+            centroid_set=idx._centroids_for(prev),
+        )
+    )
+    for snap in ("prev", prev):
+        assert rows(idx.search(q, snapshot=snap, **kw)) == want
+        for tier in (
+            lambda **a: idx.search_prefix(prefix_dims=8, **a),
+            lambda **a: idx.search_prefix_pca(prefix_dims=8, **a),
+            idx.search_sq8,
+            lambda **a: idx.search_sq8(bits=4, **a),
+            idx.search_pq,
+        ):
+            assert rows(tier(queries=q, snapshot=snap, **kw)) == want
+        got = rows(idx.search_bq(q, snapshot=snap, **kw))
+        assert got
+        for qid, nid, _, dist in got:
+            cell, label, v = view[nid]
+            assert (qid, cell) in probed and label < 6 and nid % 5
+            assert abs(dist - float(((v - qvec[qid]) ** 2).sum())) <= 6e-5
+
+
+def test_sidecar_read_memo_never_outlives_its_files(
+    spark, embeddings, monkeypatch, tmp_path
+):
+    """Each sidecar's lazy read is memoized (a warm search re-lists
+    nothing), so the memo must go wherever sidecar files are deleted:
+    invalidate_sidecars(), and a compaction whose commit GCs the old
+    sidecar generation.  The next search rebuilds what it needs and
+    stays exact — it never scans a memoized listing of deleted files."""
+    eng = VectorEngine.create(
+        embeddings.filter(F.col("vec_id") < 200),
+        str(tmp_path / "eng"),
+        n_centroids=8,
+    )
+    idx = eng.index
+    q = knn_ops.make_queries(embeddings.filter(F.col("vec_id") < 200), n=5)
+    full = idx.meta["n_centroids"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def memo_dirs():
+        return [key[0] for key in idx._read_memo if isinstance(key[0], str)]
+
+    def assert_tiers_exact(**kw):
+        want = rows(idx.search(q, k=10, nprobe=full, **kw))
+        assert rows(idx.search_sq8(q, k=10, nprobe=full, **kw)) == want
+        assert rows(idx.search_pq(q, k=10, nprobe=full, **kw)) == want
+
+    # invalidate_sidecars(): a pre-manifest raw layout keys its sidecars
+    # "raw", which no retained snapshot references, so the GC deletes
+    # them and the next search rebuilds them at the SAME paths
+    monkeypatch.setattr(type(idx), "_read_manifest", lambda self: None)
+    assert_tiers_exact()
+    raw = os.path.join(idx.index_dir, "sq8_genraw")
+    assert raw in memo_dirs()
+    idx.invalidate_sidecars()
+    assert not os.path.exists(raw) and not idx._read_memo
+    assert_tiers_exact()
+    monkeypatch.undo()
+
+    # compaction: with the default retain=1 the second commit evicts
+    # gen 0, and the engine's sidecar GC deletes gen 0's codes
+    assert_tiers_exact()
+    gen0 = [d for d in memo_dirs() if "_gen0" in d]
+    assert len(gen0) == 2
+    for lo, hi in ((200, 300), (300, 400)):
+        eng.insert(
+            embeddings.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+        )
+        assert eng.compact() > 0
+    assert not any(os.path.exists(d) for d in gen0)
+    assert_tiers_exact()
+    assert_tiers_exact(snapshot="prev")
+    assert len(memo_dirs()) == 4
+    assert all(os.path.exists(d) for d in memo_dirs())

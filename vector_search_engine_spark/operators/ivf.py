@@ -28,10 +28,27 @@ a generation's dirs only one full commit cycle after they stop being
 referenced — in-flight readers that listed the old files keep reading
 them (grace period = one compaction cycle).
 
-Scale posture: KMeans fits on a sample (MLlib distributes its own
-iterations); assignment is one map over the data; the partitioned write is
-one shuffle.  Search broadcasts only (query, centroid) pairs — never
-vectors — and each probed partition emits ≤ k rows per query.
+Scale posture: the coarse quantizer trains on a bounded driver-side
+sample; assignment is one map over the data; the partitioned write is one
+shuffle.
+
+Probed search is one pipeline (``IVFIndex._probed_search``) behind
+``search`` and the broadcast-serving tiers ``search_prefix``,
+``search_prefix_pca``, ``search_sq8`` (also sq4), ``search_bq`` and
+``search_pq`` — the FAISS ``IndexIVF`` + ``InvertedListScanner`` +
+``IndexRefine`` split.  It pins one manifest snapshot, probes the
+``nprobe`` nearest centroids per query, and broadcasts the query matrix
+plus a cell→query-index map (never vectors).  It reads only the probed
+cells of the tier's candidate source (``_read_cells``: ``centroid_id``
+partition pruning), drops excluded ids and applies the predicate before
+any cut, slices each Arrow batch by cell, runs the tier's kernel once per
+cell for all of that cell's probing queries, emits once per task, and
+finishes with the global ``(dist, id)`` top-k.  A tier is therefore
+three things (``_TierScan``): a candidate source (the float cells or a
+``centroid_id``-partitioned sidecar), a pure-NumPy per-cell kernel, and
+whether that kernel returns exact distances (float, prefix, prefix_pca)
+or surviving ids that the shared exact rescore join re-scores against
+the float cells (sq8/sq4, bq, pq).
 """
 
 from __future__ import annotations
@@ -41,7 +58,7 @@ import json
 import os
 import shutil
 import threading
-from typing import Iterator
+from typing import Callable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -183,30 +200,6 @@ def _sq_bound_mask_multi(
     return outs[0] if len(outs) == 1 else np.concatenate(outs, axis=1)
 
 
-def _emit_topk_once(best: dict, k: int):
-    """Final per-task emit shared by the probed-search kernels (r18,
-    guide §4): merge each query's accumulated candidate piles with the
-    same exact (dist, id) lexsort cut as before, but yield ONE
-    (qid, neighbor_id, dist) DataFrame per task — the per-query yield
-    shape paid one tiny Arrow batch per query per task."""
-    out_q, out_i, out_d = [], [], []
-    for qid, parts in best.items():
-        ids = np.concatenate([p[0] for p in parts])
-        d = np.concatenate([p[1] for p in parts])
-        order = np.lexsort((ids, d))[:k]
-        out_q.append(np.full(len(order), qid, dtype=np.int64))
-        out_i.append(ids[order])
-        out_d.append(d[order])
-    if out_q:
-        yield pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_i),
-                "dist": np.concatenate(out_d),
-            }
-        )
-
-
 def _emit_pairs_once(out_q: list, out_i: list):
     """Final per-task emit for the candidate-cut kernels (r18): one
     (qid, neighbor_id) DataFrame per task instead of one per cut group.
@@ -218,6 +211,35 @@ def _emit_pairs_once(out_q: list, out_i: list):
                 "neighbor_id": np.concatenate(out_i),
             }
         )
+
+
+class _TierScan(NamedTuple):
+    """One broadcast-serving tier as ``IVFIndex._probed_search`` runs it.
+
+    ``source`` is the candidate dir (a ``centroid_id``-partitioned
+    sidecar), or None for the float cells; ``cols`` are the candidate
+    columns read beside ``centroid_id`` and the id.  ``decode(pdf)``
+    turns one Arrow batch into row-aligned arrays, once per batch.
+    ``kernel(state, qidx, cell, ids, *arrays)`` is the pure-NumPy
+    per-cell step: it gets one cell's slice of those arrays and returns
+    one entry per probing query (``qidx`` order) — ``(ids, dist)`` with
+    exact distances when ``exact``, else the surviving ids, which the
+    pipeline's exact rescore join re-scores.  ``state`` is the
+    query-side payload (Q or its tier transform); it rides the search's
+    one broadcast, so kernels must not close over it."""
+
+    source: str | None
+    cols: tuple[str, ...]
+    decode: Callable
+    kernel: Callable
+    state: object
+    exact: bool = True
+
+
+def _stack_vectors(vec_col: str) -> Callable:
+    """Batch decode for the float-cell tiers: ONE object-array stack per
+    Arrow batch (r18 — the per-cell stack was the dominant Python cost)."""
+    return lambda pdf: (np.stack(pdf[vec_col].to_numpy()).astype(np.float64),)
 
 
 def _train_quantizer(
@@ -559,11 +581,11 @@ class IVFIndex:
         with open(tmp, "w") as f:
             json.dump(out, f)
         os.rename(tmp, self._manifest_path())
-        # invalidate the per-snapshot read memos: superseded generations
-        # may be GC'd above, and an in-place rebuild changing the column
-        # set must re-infer the schema (the memos are metadata caches,
-        # never result caches — see vectors())
-        self._vectors_df_cache = {}
+        # invalidate the read memos: superseded generations may be GC'd
+        # above, and an in-place rebuild changing the column set must
+        # re-infer the schema (the memos are metadata caches, never
+        # result caches — see _memo_read)
+        self._read_memo = {}
         self._vec_schema = None
 
     def next_gen(self) -> int:
@@ -690,34 +712,59 @@ class IVFIndex:
         # explicit leaf dirs + basePath: the manifest IS the snapshot —
         # partition columns (gen, centroid_id) still infer, centroid_id
         # pruning still applies, superseded generations are never listed.
-        # r18: the WHOLE lazy DataFrame is memoized per cell-map signature
-        # — creating it costs a per-call file-listing pass over every cell
-        # dir (O(n_cells) driver+FS work on every search), while the plan
-        # itself is pure metadata: every execution still scans parquet, so
-        # this caches no results.  Cell files are immutable between
-        # commits and both memos are invalidated by ``commit_cells`` (the
-        # single commit bottleneck), so a rebuild that changes the column
-        # set re-infers instead of being silently masked (r17 kept the
-        # schema memo for the instance lifetime).
+        # The lazy DataFrame is memoized per cell-map signature through
+        # the shared cell reader (_memo_read).  Both memos are dropped by
+        # ``commit_cells`` (the single commit bottleneck), so a rebuild
+        # that changes the column set re-infers instead of being silently
+        # masked (r17 kept the schema memo for the instance lifetime).
         sig = tuple(sorted((int(c), int(g)) for c, g in cells.items()))
-        cache = getattr(self, "_vectors_df_cache", None)
-        if cache is None:
-            cache = self._vectors_df_cache = {}
-        hit = cache.get(sig)
-        if hit is not None:
-            return hit
-        st = getattr(self, "_vec_schema", None)
-        reader = self.spark.read.option("basePath", root)
-        if st is not None:
-            reader = reader.schema(st)
-        df = reader.parquet(*dirs)
-        if st is None:
-            self._vec_schema = df.schema
-        out = df.drop("gen")
-        if len(cache) > 8:
-            cache.clear()  # bound retained plans (one per live snapshot)
-        cache[sig] = out
-        return out
+
+        def read() -> DataFrame:
+            st = getattr(self, "_vec_schema", None)
+            reader = self.spark.read.option("basePath", root)
+            if st is not None:
+                reader = reader.schema(st)
+            df = reader.parquet(*dirs)
+            if st is None:
+                self._vec_schema = df.schema
+            return df.drop("gen")
+
+        return self._memo_read(sig, read)
+
+    def _memo_read(self, key, read: Callable[[], DataFrame]) -> DataFrame:
+        """The one memo behind every read of cell-partitioned parquet —
+        the float cells (``vectors()``) and every ``centroid_id``-
+        partitioned sidecar (``_read_cells``).  Creating the DataFrame
+        lists the files (O(n_cells) driver+FS work, a Spark listing job
+        once a dir holds more partitions than
+        ``parallelPartitionDiscovery.threshold``), while the plan itself
+        is pure metadata: every execution still scans parquet, so this
+        caches no results, and a ``centroid_id`` filter on the memoized
+        DataFrame still prunes partitions (r18 for the float cells).  The
+        files it lists are immutable until deleted, so the memo is
+        dropped wherever files can be deleted: ``commit_cells`` (cell GC)
+        and ``invalidate_sidecars`` (sidecar GC)."""
+        cache = self.__dict__.setdefault("_read_memo", {})
+        hit = cache.get(key)
+        if hit is None:
+            if len(cache) > 16:
+                cache.clear()  # bound retained plans (live snapshots, tiers)
+            hit = cache[key] = read()
+        return hit
+
+    def _read_cells(self, path: str, cells) -> DataFrame:
+        """The probed ``cells`` of a ``centroid_id``-partitioned sidecar
+        dir: the shared memoized read (``_memo_read``) plus the
+        partition-pruning ``isin`` filter.  A sidecar dir is immutable
+        once its ``_SUCCESS`` marker is published, so the memo key
+        includes the marker's identity: a dir deleted and rebuilt at the
+        same path (a raw-layout sidecar GC, a manual rebuild) is listed
+        afresh even when the deletion bypassed ``invalidate_sidecars``."""
+        mark = os.stat(os.path.join(path, "_SUCCESS"))
+        return self._memo_read(
+            (path, mark.st_ino, mark.st_mtime_ns),
+            lambda: self.spark.read.parquet(path),
+        ).filter(F.col("centroid_id").isin(cells))
 
     def stats(self) -> DataFrame:
         """Per-centroid occupancy — the index's health check.
@@ -844,6 +891,50 @@ class IVFIndex:
         offset, or ``"prev"`` (see ``manifest_at``); probes use the
         centroid geometry that was current AT that snapshot.
         """
+        vec_col = self.meta["vec_col"]
+
+        def nearest(Q, qidx, cell, ids, V):
+            # one GEMM per cell over its probing queries — the same
+            # l2_sq_matrix the exact path (knn_exact) uses, so merged
+            # searches rank indexed and delta candidates with
+            # bitwise-identical arithmetic — then a tie-inclusive cut
+            # (every row at or below the k-th smallest distance: a
+            # superset of the exact (dist, id) top-k)
+            D = l2_sq_matrix(V, Q[qidx])
+            if len(ids) <= k:
+                return [(ids, D[:, j]) for j in range(len(qidx))]
+            part = np.argpartition(D, k - 1, axis=0)[:k]
+            keep = D <= np.take_along_axis(D, part, 0).max(axis=0)
+            return [
+                (ids[keep[:, j]], D[keep[:, j], j]) for j in range(len(qidx))
+            ]
+
+        return self._probed_search(
+            queries, k, nprobe, qid_col, qvec_col, exclude_ids, predicate,
+            snapshot, round_output,
+            lambda snap, needed, Q: _TierScan(
+                None, (vec_col,), _stack_vectors(vec_col), nearest, Q
+            ),
+        )
+
+    def _probed_search(
+        self,
+        queries,
+        k: int,
+        nprobe: int,
+        qid_col: str,
+        qvec_col: str,
+        exclude_ids,
+        predicate,
+        snapshot,
+        round_output: bool,
+        tier: Callable[[dict | None, list[int], np.ndarray], _TierScan],
+    ) -> DataFrame:
+        """The one broadcast probed-search pipeline (module docstring):
+        every step but the tier's own ``_TierScan`` — which
+        ``tier(snap, needed, Q)`` builds once the snapshot is pinned and
+        the probed cells are known (building its sidecar for that
+        snapshot) — is shared by the six broadcast-serving tiers."""
         id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
         spark = self.spark
@@ -860,6 +951,10 @@ class IVFIndex:
         # (from manifest_at / _read_manifest) is used as-is so a caller —
         # e.g. search_filtered's cost model — can make its strategy choice
         # and its scan observe ONE snapshot even under concurrent commits.
+        # Sidecars are keyed by (and built from) this snapshot, so codes
+        # and the float rescore base always agree — a commit landing
+        # mid-search can neither skew nor delete them (EBR retention covers
+        # sidecars like base cells).
         snap = (
             snapshot
             if isinstance(snapshot, dict)
@@ -871,6 +966,7 @@ class IVFIndex:
             qids, Q, nprobe, centroid_set=self._centroids_for(snap)
         )
         needed = sorted({c for _, c in pairs})
+        scan = tier(snap, needed, Q.astype(np.float64))
 
         # r17 (guide §2.3/§4): the probe assignment rides the query
         # broadcast as a cell→query-index map instead of a pairs
@@ -878,61 +974,74 @@ class IVFIndex:
         # DUPLICATED every candidate row once per probing query before
         # the Python boundary (nprobe·|Q| fan-out: at full probe every
         # vector crossed Arrow |Q| times); now each cell's rows cross
-        # ONCE and the per-cell kernel is a single GEMM over that
-        # cell's probing queries — the same ``l2_sq_matrix`` the exact
-        # path (knn_exact) uses, so merged searches rank indexed and
-        # delta candidates with bitwise-identical arithmetic.
+        # ONCE and the kernel runs once per cell for all its probing
+        # queries.
         qpos = {int(q): i for i, q in enumerate(qids)}
         cell_qidx: dict[int, list[int]] = {}
         for qid, c in pairs:
             cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
         bc = spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
+            (qids.astype(np.int64), cell_qidx, scan.state)
         )
 
-        # isin on the partition column → parquet partition pruning
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
+        # isin on the partition column → parquet partition pruning.  A
+        # sidecar's candidate columns are selected up front; the float
+        # cells' only after the predicate, which reads metadata columns.
+        cols = ("centroid_id", id_col, *scan.cols)
+        cand = (
+            self.vectors(snapshot=snap).filter(
+                F.col("centroid_id").isin(needed)
+            )
+            if scan.source is None
+            else self._read_cells(scan.source, needed).select(*cols)
         )
-        if exclude_ids is not None:
-            if isinstance(exclude_ids, DataFrame):
-                # anti-join path: the shadowed-id set can be arbitrarily
-                # large under sustained streaming — never driver-collected
-                base = base.join(
-                    exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                    on=id_col,
-                    how="left_anti",
-                )
-            elif exclude_ids:
-                base = base.filter(~F.col(id_col).isin(list(exclude_ids)))
-        if predicate is not None:
-            base = base.filter(predicate)
-        cand = base.select(
-            F.col("centroid_id"), F.col(id_col), F.col(vec_col)
-        )
+        # exclusion and predicate apply BEFORE any cut: a disqualified
+        # row's small upper bound would otherwise tighten the k-th bound
+        # and evict a legitimate survivor
+        if isinstance(exclude_ids, DataFrame):
+            # anti-join path: the shadowed-id set can be arbitrarily
+            # large under sustained streaming — never driver-collected
+            cand = cand.join(
+                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
+                id_col,
+                "left_anti",
+            )
+        elif exclude_ids:
+            cand = cand.filter(~F.col(id_col).isin(list(exclude_ids)))
+        if scan.source is None:
+            if predicate is not None:
+                cand = cand.filter(predicate)
+            cand = cand.select(*cols)
+        elif predicate is not None:
+            # predicate columns live in the float table, not the sidecar:
+            # qualifying ids come from a metadata-only read of the SAME
+            # pruned cells (column pruning drops the vector bytes)
+            keep_ids = (
+                self.vectors(snapshot=snap)
+                .filter(F.col("centroid_id").isin(needed))
+                .filter(predicate)
+                .select(id_col)
+            )
+            cand = cand.join(keep_ids, id_col, "left_semi")
+        decode, kernel, exact = scan.decode, scan.kernel, scan.exact
 
-        def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # r18 kernel shape (guide §4.2): ONE object-array stack per
-            # Arrow batch (the per-cell np.stack was the dominant Python
-            # cost), contiguous cell slices via argsort instead of pandas
-            # groupby, a vectorized tie-inclusive cut per cell (argpartition
-            # over the full D matrix — keeps every candidate at or below the
-            # k-th smallest distance, a provable superset of the exact
-            # (dist, id) top-k, so the exact merges below are unchanged),
+        def scan_cells(
+            batches: Iterator[pd.DataFrame],
+        ) -> Iterator[pd.DataFrame]:
+            # r18 kernel shape (guide §4.2): one decode per Arrow batch,
+            # contiguous cell slices via a stable argsort (row order
+            # within a cell is the batch order, so every cut group is
+            # the (cell slice of an Arrow batch, query) it always was),
             # and ONE DataFrame yield per task instead of one tiny Arrow
-            # batch per query.  Per-cell GEMM is the same l2_sq_matrix call
-            # as before — merged searches still rank indexed and delta
-            # candidates with bitwise-identical arithmetic.
-            qids_, Q_, cq = bc.value
-            nq = len(qids_)
-            acc_ids: list[list] = [[] for _ in range(nq)]
-            acc_d: list[list] = [[] for _ in range(nq)]
+            # batch per query
+            qids_, cq, state = bc.value
+            acc: list[list] = [[] for _ in qids_]
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 cids = pdf["centroid_id"].to_numpy()
                 ids_all = pdf[id_col].to_numpy(dtype=np.int64)
-                V_all = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                arrays = decode(pdf)
                 order = np.argsort(cids, kind="stable")
                 cs = cids[order]
                 cuts = np.flatnonzero(cs[1:] != cs[:-1]) + 1
@@ -943,32 +1052,30 @@ class IVFIndex:
                     if not qidx:
                         continue
                     rows = order[s:e]
-                    ids = ids_all[rows]
-                    D = l2_sq_matrix(V_all[rows], Q_[qidx])
-                    if len(ids) > k:
-                        part = np.argpartition(D, k - 1, axis=0)[:k]
-                        t = np.take_along_axis(D, part, 0).max(axis=0)
-                        for j, qi in enumerate(qidx):
-                            keep = D[:, j] <= t[j]
-                            acc_ids[qi].append(ids[keep])
-                            acc_d[qi].append(D[keep, j])
-                    else:
-                        for j, qi in enumerate(qidx):
-                            acc_ids[qi].append(ids)
-                            acc_d[qi].append(D[:, j])
+                    got = kernel(
+                        state, qidx, int(cs[s]), ids_all[rows],
+                        *(a[rows] for a in arrays),
+                    )
+                    for qi, g in zip(qidx, got):
+                        acc[qi].append(g)
             out_q, out_i, out_d = [], [], []
-            for qi in range(nq):
-                if not acc_ids[qi]:
+            for qi, piles in enumerate(acc):
+                if not piles:
                     continue
-                ids = np.concatenate(acc_ids[qi])
-                d = np.concatenate(acc_d[qi])
-                if len(ids) > k:
+                if exact:
+                    # the same exact (dist, id) cut the global merge uses
+                    ids = np.concatenate([p[0] for p in piles])
+                    d = np.concatenate([p[1] for p in piles])
                     o = np.lexsort((ids, d))[:k]
-                    ids, d = ids[o], d[o]
+                    ids = ids[o]
+                    out_d.append(d[o])
+                else:
+                    ids = np.concatenate(piles)
                 out_q.append(np.full(len(ids), qids_[qi], dtype=np.int64))
                 out_i.append(ids)
-                out_d.append(d)
-            if out_q:
+            if not exact:
+                yield from _emit_pairs_once(out_q, out_i)
+            elif out_q:
                 yield pd.DataFrame(
                     {
                         "qid": np.concatenate(out_q),
@@ -977,10 +1084,35 @@ class IVFIndex:
                     }
                 )
 
-        cand_topk = cand.mapInPandas(
-            local_topk, schema="qid long, neighbor_id long, dist double"
+        cand = cand.mapInPandas(
+            scan_cells,
+            schema="qid long, neighbor_id long"
+            + (", dist double" if exact else ""),
         )
-        return _finalize_topk(cand_topk, k, "l2_sq", round_output)
+        if not exact:
+            # exact re-score: survivors rejoin the float vectors (same
+            # pruned partitions), broadcast queries, standard (dist, id)
+            # top-k
+            from vector_search_engine_spark.functions.vector import l2_sq
+            from vector_search_engine_spark.operators.knn import _queries_df
+
+            base = self.vectors(snapshot=snap).filter(
+                F.col("centroid_id").isin(needed)
+            )
+            qdf = _queries_df(spark, queries, qids, Q, qid_col, qvec_col)
+            cand = (
+                cand.join(
+                    base.select(F.col(id_col).alias("neighbor_id"), vec_col),
+                    "neighbor_id",
+                )
+                .join(F.broadcast(qdf), "qid")
+                .select(
+                    "qid",
+                    "neighbor_id",
+                    l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
+                )
+            )
+        return _finalize_topk(cand, k, "l2_sq", round_output)
 
     def search_filtered(
         self,
@@ -1320,99 +1452,43 @@ class IVFIndex:
         the cut — harmless here since the cut is lossless, kept for plan
         parity with the quantized tiers), ``exclude_ids`` and as-of
         ``snapshot`` exactly as ``search()`` does."""
-        id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
-        spark = self.spark
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        dp = max(1, min(int(prefix_dims), Q.shape[1]))
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
-        # r17: probe assignment rides the query broadcast (see search())
-        # — cell rows cross the Python boundary once and are stacked
-        # once per cell, with the per-query prefix-cut arithmetic kept
-        # byte-for-byte identical (the cut threshold and the returned
-        # full distances use the same expressions as before).
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
-        bc = spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
-        )
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        if exclude_ids is not None:
-            if isinstance(exclude_ids, DataFrame):
-                base = base.join(
-                    exclude_ids.select(
-                        F.col(exclude_ids.columns[0]).alias(id_col)
-                    ),
-                    on=id_col,
-                    how="left_anti",
+        dp = max(1, min(int(prefix_dims), int(self.meta["dim"])))
+
+        def prefix_cut(Q, qidx, cell, ids, V):
+            n = len(ids)
+            Vp = V[:, :dp]
+            VVp = (Vp * Vp).sum(axis=1)
+            kk = min(k, n)
+            out = []
+            for qi in qidx:
+                q = Q[qi]
+                qp = q[:dp]
+                dpd = VVp - 2.0 * (Vp @ qp) + float(qp @ qp)
+                np.maximum(dpd, 0.0, out=dpd)
+                seed = (
+                    np.argpartition(dpd, kk - 1)[:kk]
+                    if n > kk
+                    else np.arange(n)
                 )
-            elif exclude_ids:
-                base = base.filter(~F.col(id_col).isin(list(exclude_ids)))
-        if predicate is not None:
-            base = base.filter(predicate)
-        cand = base.select(
-            F.col("centroid_id"), F.col(id_col), F.col(vec_col)
-        )
+                diff = V[seed] - q
+                T = (diff * diff).sum(axis=1).max()
+                # same fp-slack guard as knn_prefix_rescore: the GEMM
+                # bound may exceed the true one by ~1e-13
+                surv = np.flatnonzero(dpd <= T + 1e-9 * (1.0 + T))
+                diff = V[surv] - q
+                full = (diff * diff).sum(axis=1)
+                order = np.lexsort((ids[surv], full))[:kk]
+                out.append((ids[surv][order], full[order]))
+            return out
 
-        def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids_, Q_, cq = bc.value
-            best: dict[int, list] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    V = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
-                    n = len(ids)
-                    Vp = V[:, :dp]
-                    VVp = (Vp * Vp).sum(axis=1)
-                    kk = min(k, n)
-                    for qi in qidx:
-                        q = Q_[qi]
-                        qp = q[:dp]
-                        dpd = VVp - 2.0 * (Vp @ qp) + float(qp @ qp)
-                        np.maximum(dpd, 0.0, out=dpd)
-                        seed = (
-                            np.argpartition(dpd, kk - 1)[:kk]
-                            if n > kk
-                            else np.arange(n)
-                        )
-                        diff = V[seed] - q
-                        T = (diff * diff).sum(axis=1).max()
-                        # same fp-slack guard as knn_prefix_rescore: the
-                        # GEMM bound may exceed the true one by ~1e-13
-                        surv = np.flatnonzero(dpd <= T + 1e-9 * (1.0 + T))
-                        diff = V[surv] - q
-                        full = (diff * diff).sum(axis=1)
-                        order = np.lexsort((ids[surv], full))[:kk]
-                        best.setdefault(int(qids_[qi]), []).append(
-                            (ids[surv][order], full[order])
-                        )
-            yield from _emit_topk_once(best, k)
-
-        cand_topk = cand.mapInPandas(
-            local_topk, schema="qid long, neighbor_id long, dist double"
+        return self._probed_search(
+            queries, k, nprobe, qid_col, qvec_col, exclude_ids, predicate,
+            snapshot, round_output,
+            lambda snap, needed, Q: _TierScan(
+                None, (vec_col,), _stack_vectors(vec_col), prefix_cut, Q
+            ),
         )
-        return _finalize_topk(cand_topk, k, "l2_sq", round_output)
 
     # staleness ratio below which a carried-forward PCA rotation is
     # considered stale and ensure_pca_rot retrains from scratch: the
@@ -1746,112 +1822,62 @@ class IVFIndex:
         spectrally-concentrated corpus where SQ8's 4× byte win is
         unavailable (e.g. pre-quantized storage is prohibited).
         Otherwise prefer ``search_sq8`` (byte cut AND wall win)."""
-        id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
-        spark = self.spark
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
-        rot_dir = self.ensure_pca_rot(snapshot=snap)
-        R = np.load(os.path.join(rot_dir, "rotation.npy"))
-        dp = max(1, min(int(prefix_dims), Q.shape[1]))
-        # r17: probe assignment rides the query broadcast (see search())
-        # — each rotated row crosses the Python boundary once, stacked
-        # once per cell; the per-query cut/threshold/rescore arithmetic
-        # below is byte-for-byte the previous expressions.
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
-        Q64 = Q.astype(np.float64)
-        bc = spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Q64, Q64 @ R, cell_qidx)
-        )
-        rows = spark.read.parquet(rot_dir).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        cand_rows = rows.select(
-            "centroid_id", id_col, vec_col, "rotvec", "vnorm"
-        )
-        if exclude_ids is not None:
-            cand_rows = cand_rows.join(
-                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                id_col,
-                "left_anti",
-            )
-        if predicate is not None:
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(needed))
-                .filter(predicate)
-                .select(id_col)
-            )
-            cand_rows = cand_rows.join(keep_ids, id_col, "left_semi")
+        dp = max(1, min(int(prefix_dims), int(self.meta["dim"])))
 
-        def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids_, Q_, QR_, cq = bc.value
-            best: dict[int, list] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    Zp = np.stack(
-                        [z[:dp] for z in grp["rotvec"].to_numpy()]
-                    ).astype(np.float64)
-                    ZZp = (Zp * Zp).sum(axis=1)
-                    vn = grp["vnorm"].to_numpy(dtype=np.float64)
-                    n = len(ids)
-                    # float32-storage error budget (see docstring)
-                    e_v = (2.0 ** -23) * vn + 1e-9
-                    kk = min(k, n)
-                    vec_arr = grp[vec_col].to_numpy()
-                    for qi in qidx:
-                        q = Q_[qi]
-                        qp = QR_[qi][:dp]
-                        dpd = ZZp - 2.0 * (Zp @ qp) + float(qp @ qp)
-                        np.maximum(dpd, 0.0, out=dpd)
-                        lb = np.sqrt(dpd) - e_v
-                        seed = (
-                            np.argpartition(lb, kk - 1)[:kk]
-                            if n > kk
-                            else np.arange(n)
-                        )
-                        # original floats materialize ONLY for seed +
-                        # survivors — the FLOPs (and copy) saving the cut
-                        # exists to deliver
-                        diff = np.stack(vec_arr[seed]).astype(np.float64) - q
-                        # threshold from EXACT original-float distances —
-                        # the seed's true distances upper-bound the k-th
-                        # best
-                        T = np.sqrt((diff * diff).sum(axis=1).max())
-                        surv = np.flatnonzero(lb <= T * (1 + 1e-9) + 1e-9)
-                        diff = np.stack(vec_arr[surv]).astype(np.float64) - q
-                        full = (diff * diff).sum(axis=1)
-                        order = np.lexsort((ids[surv], full))[:kk]
-                        best.setdefault(int(qids_[qi]), []).append(
-                            (ids[surv][order], full[order])
-                        )
-            yield from _emit_topk_once(best, k)
+        def decode(pdf):
+            return (
+                np.stack([z[:dp] for z in pdf["rotvec"].to_numpy()]).astype(
+                    np.float64
+                ),
+                pdf["vnorm"].to_numpy(dtype=np.float64),
+                pdf[vec_col].to_numpy(),
+            )
 
-        cand_topk = cand_rows.mapInPandas(
-            local_topk, schema="qid long, neighbor_id long, dist double"
+        def rotated_prefix_cut(state, qidx, cell, ids, Zp, vn, vec_arr):
+            Q, QR = state
+            ZZp = (Zp * Zp).sum(axis=1)
+            n = len(ids)
+            # float32-storage error budget (see docstring)
+            e_v = (2.0 ** -23) * vn + 1e-9
+            kk = min(k, n)
+            out = []
+            for qi in qidx:
+                q = Q[qi]
+                qp = QR[qi][:dp]
+                dpd = ZZp - 2.0 * (Zp @ qp) + float(qp @ qp)
+                np.maximum(dpd, 0.0, out=dpd)
+                lb = np.sqrt(dpd) - e_v
+                seed = (
+                    np.argpartition(lb, kk - 1)[:kk]
+                    if n > kk
+                    else np.arange(n)
+                )
+                # original floats materialize ONLY for seed + survivors —
+                # the FLOPs (and copy) saving the cut exists to deliver
+                diff = np.stack(vec_arr[seed]).astype(np.float64) - q
+                # threshold from EXACT original-float distances — the
+                # seed's true distances upper-bound the k-th best
+                T = np.sqrt((diff * diff).sum(axis=1).max())
+                surv = np.flatnonzero(lb <= T * (1 + 1e-9) + 1e-9)
+                diff = np.stack(vec_arr[surv]).astype(np.float64) - q
+                full = (diff * diff).sum(axis=1)
+                order = np.lexsort((ids[surv], full))[:kk]
+                out.append((ids[surv][order], full[order]))
+            return out
+
+        def tier(snap, needed, Q):
+            rot_dir = self.ensure_pca_rot(snapshot=snap)
+            R = np.load(os.path.join(rot_dir, "rotation.npy"))
+            return _TierScan(
+                rot_dir, (vec_col, "rotvec", "vnorm"), decode,
+                rotated_prefix_cut, (Q, Q @ R),
+            )
+
+        return self._probed_search(
+            queries, k, nprobe, qid_col, qvec_col, exclude_ids, predicate,
+            snapshot, round_output, tier,
         )
-        return _finalize_topk(cand_topk, k, "l2_sq", round_output)
 
     def search_distributed(
         self,
@@ -2325,9 +2351,7 @@ class IVFIndex:
             queries, qid_col, qvec_col, snap, nprobe
         )
         cells = self._probed_cells_distributed(probes, nprobe, n_cells, snap)
-        codes = spark.read.parquet(sq_dir).filter(
-            F.col("centroid_id").isin(cells)
-        )
+        codes = self._read_cells(sq_dir, cells)
         if exclude_ids is not None:
             # shadowed-id exclusion PRE-CUT on the code side (merged
             # engine contract): an excluded id can then never survive
@@ -2502,9 +2526,7 @@ class IVFIndex:
         )
 
         # ---- stage 1: BQ asymmetric top-C over the probed 1-bit codes
-        bq_codes = spark.read.parquet(bq_dir).filter(
-            F.col("centroid_id").isin(cells)
-        )
+        bq_codes = self._read_cells(bq_dir, cells)
         if exclude_ids is not None:
             # shadowed ids leave before stage 1's cut: they can then
             # never survive into stages 2-3 (merged engine contract)
@@ -2598,8 +2620,7 @@ class IVFIndex:
 
         # ---- stage 2: lossless SQ8 bound cut over stage-1 survivors
         sq_side = (
-            spark.read.parquet(sq_dir)
-            .filter(F.col("centroid_id").isin(cells))
+            self._read_cells(sq_dir, cells)
             .select(F.col(id_col).alias("neighbor_id"), "code", "lo", "hi")
         )
         cand2_codes = cand1.join(sq_side, "neighbor_id")
@@ -2863,123 +2884,29 @@ class IVFIndex:
         tier.  Generation-keyed sidecars make this sound: codes for the
         historical snapshot are built from (and GC-protected with) that
         snapshot's own files."""
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
         dim = self.meta["dim"]
-        spark = self.spark
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        # snapshot discipline as in search(); the sq8 sidecar is keyed by
-        # this snapshot's generation and built from it (ensure_sq8(snap)),
-        # so codes and the float re-score base always agree — a rebalance
-        # committing mid-search can neither skew nor delete them (EBR
-        # retention covers sidecars like base cells)
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
-        # r17: probe assignment rides the query broadcast as a
-        # cell→query-index map (see search()) — codes cross the Python
-        # boundary ONCE instead of once per probing query, and each
-        # cell decodes once with the bound evaluated for all its
-        # probing queries in one GEMM (_sq_bound_mask_multi).  The cut
-        # group becomes (cell slice of an Arrow batch, query) instead
-        # of (mixed-cell batch slice, query) — a coarser group, so the
-        # kept set is a (still lossless) superset and the exact rescore
-        # below yields identical results.
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
-        bc = spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Q.astype(np.float64), cell_qidx)
-        )
 
-        sq_dir = self.ensure_sq8(snapshot=snap, bits=bits)
-        codes = spark.read.parquet(sq_dir).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        cand_codes = codes.select(
-            "centroid_id", id_col, "code", "lo", "hi"
-        )
-        if exclude_ids is not None:
-            cand_codes = cand_codes.join(
-                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                id_col,
-                "left_anti",
+        def decode(pdf):
+            return (
+                pdf["code"].to_numpy(),
+                pdf["lo"].to_numpy(dtype=np.float64),
+                pdf["hi"].to_numpy(dtype=np.float64),
             )
-        if predicate is not None:
-            # pre-cut filtering (losslessness: a disqualified vector's
-            # small ub must not tighten the k-th bound); metadata-only
-            # read — column pruning drops the vector bytes
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(needed))
-                .filter(predicate)
-                .select(id_col)
-            )
-            cand_codes = cand_codes.join(keep_ids, id_col, "left_semi")
 
-        def approx_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids_, Q_, cq = bc.value
-            out_q: list = []
-            out_id: list = []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    KEEP = _sq_bound_mask_multi(
-                        grp["code"],
-                        grp["lo"].to_numpy(dtype=np.float64),
-                        grp["hi"].to_numpy(dtype=np.float64),
-                        Q_[qidx], dim, bits, k,
-                    )
-                    for j, qi in enumerate(qidx):
-                        kept = ids[KEEP[:, j]]
-                        out_q.append(
-                            np.full(len(kept), qids_[qi], dtype=np.int64)
-                        )
-                        out_id.append(kept)
-            yield from _emit_pairs_once(out_q, out_id)
+        def bound_cut(Q, qidx, cell, ids, codes, lo, hi):
+            # each cell slice decodes once and evaluates the bound for
+            # all its probing queries in one GEMM
+            keep = _sq_bound_mask_multi(codes, lo, hi, Q[qidx], dim, bits, k)
+            return [ids[keep[:, j]] for j in range(len(qidx))]
 
-        cand = cand_codes.mapInPandas(
-            approx_cut, schema="qid long, neighbor_id long"
+        return self._probed_search(
+            queries, k, nprobe, qid_col, qvec_col, exclude_ids, predicate,
+            snapshot, round_output,
+            lambda snap, needed, Q: _TierScan(
+                self.ensure_sq8(snapshot=snap, bits=bits),
+                ("code", "lo", "hi"), decode, bound_cut, Q, exact=False,
+            ),
         )
-        # exact re-score: survivors rejoin the float vectors (same pruned
-        # partitions), broadcast queries, standard (dist, id) top-k
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        from vector_search_engine_spark.operators.knn import _queries_df
-
-        qdf = _queries_df(spark, queries, qids, Q, qid_col, qvec_col)
-        from vector_search_engine_spark.functions.vector import l2_sq
-
-        rescored = (
-            cand.join(
-                base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-                "neighbor_id",
-            )
-            .join(F.broadcast(qdf), "qid")
-            .select(
-                "qid",
-                "neighbor_id",
-                l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
-            )
-        )
-        return _finalize_topk(rescored, k, "l2_sq", round_output)
 
     def ensure_bq(self, snapshot: dict | None = None) -> str:
         """Write (once) the binary-quantization sidecar: packed sign-bit
@@ -3323,136 +3250,49 @@ class IVFIndex:
         per-cell budget.  ``predicate`` / ``exclude_ids`` /
         ``snapshot`` compose exactly as in ``search_sq8`` (pre-cut
         metadata semi-join / anti-join; generation-keyed sidecar)."""
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
-        spark = self.spark
         C = int(candidates_per_cell) if candidates_per_cell else 8 * k
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
-            )
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
-        budget_map = (
-            self._auto_sign_budget(k, snap, needed, "search_bq")
-            if candidates_per_cell is None
-            else None
-        )
-        bq_dir = self.ensure_bq(snapshot=snap)
-        with open(os.path.join(bq_dir, "thresholds.json")) as f:
-            thr = np.array(json.load(f)["thresholds"], dtype=np.float64)
-        # r17: probe assignment rides the query broadcast as a
-        # cell→query-index map (see search()) — the packed codes cross
-        # the Python boundary ONCE instead of once per probing query,
-        # and each cell slice unpacks its bits once, scoring all its
-        # probing queries in one GEMM.  The cut unit is unchanged:
-        # per (cell slice of an Arrow batch, query), budget per cell.
-        # The asymmetric score works in centered space: bits encode
-        # sign(v − t), so the scan side ranks by (q − t) · sign(v − t);
-        # the exact rescore below uses the UNcentered queries.
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
-        bc = spark.sparkContext.broadcast(
-            (
-                qids.astype(np.int64),
-                Q.astype(np.float64) - thr[None, :],
-                cell_qidx,
-            )
-        )
 
-        codes = spark.read.parquet(bq_dir).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        cand_codes = codes.select(
-            "centroid_id", id_col, "code", "dim"
-        )
-        if exclude_ids is not None:
-            cand_codes = cand_codes.join(
-                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                id_col,
-                "left_anti",
-            )
-        if predicate is not None:
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(needed))
-                .filter(predicate)
-                .select(id_col)
-            )
-            cand_codes = cand_codes.join(keep_ids, id_col, "left_semi")
+        def decode(pdf):
+            raw = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8)
+            d = int(pdf["dim"].iloc[0])
+            return (np.unpackbits(raw.reshape(len(pdf), -1), axis=1)[:, :d],)
 
-        def approx_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # per (cell slice of an Arrow batch, query): the cut budget
-            # is the auto-derived per-cell population (finding 41) when
-            # the caller left candidates_per_cell unset, else the
-            # caller's uniform C
-            qids_, Qc_, cq = bc.value
-            out_q: list = []
-            out_id: list = []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    d = int(grp["dim"].iloc[0])
-                    raw = np.frombuffer(b"".join(grp["code"]), dtype=np.uint8)
-                    bits = np.unpackbits(raw.reshape(len(ids), -1), axis=1)[
-                        :, :d
-                    ]
-                    S = (2.0 * bits - 1.0) @ Qc_[qidx].T  # (n, |qidx|)
-                    cap_c = (
-                        C if budget_map is None
-                        else budget_map.get(int(cid), C)
-                    )
-                    keep = min(cap_c, len(ids))
-                    for j, qi in enumerate(qidx):
-                        sel = (
-                            np.argpartition(-S[:, j], keep - 1)[:keep]
-                            if len(ids) > keep
-                            else np.arange(len(ids))
-                        )
-                        out_q.append(
-                            np.full(len(sel), qids_[qi], dtype=np.int64)
-                        )
-                        out_id.append(ids[sel])
-            yield from _emit_pairs_once(out_q, out_id)
+        def top_c(state, qidx, cell, ids, bits):
+            # per (cell slice of an Arrow batch, query): the budget is the
+            # auto-derived cell population (finding 41) when the caller
+            # left candidates_per_cell unset, else the caller's uniform C
+            Qc, budgets = state
+            S = (2.0 * bits - 1.0) @ Qc[qidx].T  # (n, |qidx|)
+            cap_c = C if budgets is None else budgets.get(cell, C)
+            keep = min(cap_c, len(ids))
+            if len(ids) <= keep:
+                return [ids] * len(qidx)
+            return [
+                ids[np.argpartition(-S[:, j], keep - 1)[:keep]]
+                for j in range(len(qidx))
+            ]
 
-        cand = cand_codes.mapInPandas(
-            approx_cut, schema="qid long, neighbor_id long"
-        )
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        from vector_search_engine_spark.functions.vector import l2_sq
-        from vector_search_engine_spark.operators.knn import _queries_df
+        def tier(snap, needed, Q):
+            budgets = (
+                self._auto_sign_budget(k, snap, needed, "search_bq")
+                if candidates_per_cell is None
+                else None
+            )
+            bq_dir = self.ensure_bq(snapshot=snap)
+            with open(os.path.join(bq_dir, "thresholds.json")) as f:
+                thr = np.array(json.load(f)["thresholds"], dtype=np.float64)
+            # the asymmetric score works in centered space: bits encode
+            # sign(v − t), so the scan ranks by (q − t) · sign(v − t); the
+            # exact rescore uses the UNcentered queries
+            return _TierScan(
+                bq_dir, ("code", "dim"), decode, top_c,
+                (Q - thr[None, :], budgets), exact=False,
+            )
 
-        qdf = _queries_df(spark, queries, qids, Q, qid_col, qvec_col)
-        rescored = (
-            cand.join(
-                base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-                "neighbor_id",
-            )
-            .join(F.broadcast(qdf), "qid")
-            .select(
-                "qid",
-                "neighbor_id",
-                l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
-            )
+        return self._probed_search(
+            queries, k, nprobe, qid_col, qvec_col, exclude_ids, predicate,
+            snapshot, round_output, tier,
         )
-        return _finalize_topk(rescored, k, "l2_sq", round_output)
 
     def search_cascade(
         self,
@@ -3561,9 +3401,7 @@ class IVFIndex:
             )
         )
 
-        bq_codes = spark.read.parquet(bq_dir).filter(
-            F.col("centroid_id").isin(needed)
-        )
+        bq_codes = self._read_cells(bq_dir, needed)
         cand_codes = bq_codes.select("centroid_id", id_col, "code", "dim")
         if exclude_ids is not None:
             cand_codes = cand_codes.join(
@@ -3639,9 +3477,7 @@ class IVFIndex:
         # commit, not per search.  Above the threshold the join falls
         # back to a shuffle instead of OOMing the driver.
         sq_dir = self.ensure_sq8(snapshot=snap, bits=8)
-        sq_codes = spark.read.parquet(sq_dir).filter(
-            F.col("centroid_id").isin(needed)
-        )
+        sq_codes = self._read_cells(sq_dir, needed)
         cell_counts = self._snapshot_counts(snap)
         arrow_batch = int(
             spark.conf.get(
@@ -3891,9 +3727,7 @@ class IVFIndex:
         graph_dir = self.ensure_graph(
             snapshot=snap, m=m, ef_construction=ef_construction
         )
-        g = spark.read.parquet(graph_dir).filter(
-            F.col("centroid_id").isin(needed)
-        )
+        g = self._read_cells(graph_dir, needed)
 
         def walk(pdf: pd.DataFrame) -> pd.DataFrame:
             empty = pd.DataFrame(
@@ -4096,6 +3930,8 @@ class IVFIndex:
                 if len(tag) == 2 and gen in retained:
                     continue  # still referenced by a retained snapshot
                 shutil.rmtree(d, ignore_errors=True)
+            # a memoized sidecar read must never outlive its files
+            self._read_memo = {}
 
     def center_map(self, manifest: dict | None = None) -> dict[int, np.ndarray]:
         """centroid_id → float64 centroid vector (broadcastable; a few MB
@@ -4302,161 +4138,58 @@ class IVFIndex:
             bound_cut_mask,
         )
 
-        id_col = self.meta["id_col"]
-        vec_col = self.meta["vec_col"]
-        spark = self.spark
-        qids, Q = knn_query_arrays(queries, qid_col, qvec_col)
-        if len(qids) == 0:
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, rank long, dist_sq double"
+        def decode(pdf):
+            raw = np.frombuffer(b"".join(pdf["code"]), dtype=np.uint8)
+            return (
+                raw.reshape(len(pdf), -1),
+                pdf["resid"].to_numpy(dtype=np.float64),
             )
-        snap = (
-            self.manifest_at(snapshot)
-            if snapshot is not None
-            else self._read_manifest()
-        )
-        pairs = self.probe_pairs(
-            qids, Q, nprobe, centroid_set=self._centroids_for(snap)
-        )
-        needed = sorted({c for _, c in pairs})
-        codes_dir, books = self.ensure_pq(
-            m=m, residual=residual, snapshot=snap, opq=opq
-        )
-        # OPQ (opq=True): codes live in rotated space; rotating BOTH the
-        # query map and the center map keeps the per-(query, cell) LUT
-        # math identical ((q − c)·R = q·R − c·R) with zero kernel changes.
-        # The rescore below uses the UNrotated base — distances are
-        # rotation-invariant, so results match the plain tier exactly.
-        R = (
-            np.load(os.path.join(os.path.dirname(codes_dir), "rotation.npy"))
-            if opq
-            else None
-        )
-        # r17: probe assignment rides the query broadcast as a
-        # cell→query-index map (see search()) — codes cross the Python
-        # boundary once and decode once per cell slice; the per-(query,
-        # cell) ADC LUT count is unchanged (it was always per pair).
-        # Cut group becomes (cell slice of an Arrow batch, query) — for
-        # the lossless bound a still-lossless superset (exact rescore
-        # unchanged); for top-C mode a per-cell-slice C (≥ recall of the
-        # old per-batch C).
-        Qs = Q.astype(np.float64) if R is None else Q.astype(np.float64) @ R
-        qpos = {int(q): i for i, q in enumerate(qids)}
-        cell_qidx: dict[int, list[int]] = {}
-        for qid, c in pairs:
-            cell_qidx.setdefault(int(c), []).append(qpos[int(qid)])
-        q_bc = spark.sparkContext.broadcast(
-            (qids.astype(np.int64), Qs, cell_qidx)
-        )
-        books_bc = spark.sparkContext.broadcast(books)
-        cm = self.center_map(snap) if residual else None
-        if cm is not None and R is not None:
-            cm = {cid: c @ R for cid, c in cm.items()}
-        cm_bc = spark.sparkContext.broadcast(cm) if residual else None
-        codes = spark.read.parquet(codes_dir).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        cand_codes = codes.select(
-            "centroid_id", id_col, "code", "resid"
-        )
-        if exclude_ids is not None:
-            # exclusion must happen BEFORE the cut: an excluded vector's
-            # small upper bound would otherwise tighten the k-th ub and
-            # could evict a legitimate survivor (same reason search()
-            # anti-joins before its scan)
-            cand_codes = cand_codes.join(
-                exclude_ids.select(F.col(exclude_ids.columns[0]).alias(id_col)),
-                id_col,
-                "left_anti",
+
+        def adc_cut(state, qidx, cell, ids, Cc, resid):
+            Qs, B, CM = state
+            cols = np.arange(B.shape[0])[None, :]
+            out = []
+            for qi in qidx:
+                q = Qs[qi] if CM is None else Qs[qi] - CM[cell]
+                lut = _adc_lut(q, B)
+                # ADC: d̂ = Σ_j lut[j, code_j] — m lookups/vector
+                d_adc = lut[cols, Cc].sum(axis=1)
+                np.maximum(d_adc, 0.0, out=d_adc)
+                if candidates_per_partition is not None:
+                    keep_n = min(max(candidates_per_partition, k), len(ids))
+                    out.append(
+                        ids[np.argpartition(d_adc, keep_n - 1)[:keep_n]]
+                    )
+                else:
+                    out.append(ids[bound_cut_mask(d_adc, resid, k)])
+            return out
+
+        def tier(snap, needed, Q):
+            codes_dir, books = self.ensure_pq(
+                m=m, residual=residual, snapshot=snap, opq=opq
             )
-        if predicate is not None:
-            # qualifying ids from a metadata-only read of the SAME pruned
-            # cells (column pruning drops the vector bytes); semi-join
-            # before the cut for the same losslessness reason as above
-            keep_ids = (
-                self.vectors(snapshot=snap)
-                .filter(F.col("centroid_id").isin(needed))
-                .filter(predicate)
-                .select(id_col)
-            )
-            cand_codes = cand_codes.join(keep_ids, id_col, "left_semi")
-        def adc_cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # r18: candidate (qid, id) pairs accumulate across the task and
-            # cross Arrow ONCE per task — the r17 shape yielded one tiny
-            # DataFrame per (cell, query) pair (|Q|·nprobe Arrow batches per
-            # task).  The cut math per (cell slice, query) is UNCHANGED:
-            # same LUT, same d_adc, same argpartition / bound mask — the
-            # candidate SET is identical, only its framing is batched.
-            B = books_bc.value
-            m_, _, _ = B.shape
-            qids_, Qs_, cq = q_bc.value
-            CM = cm_bc.value if cm_bc is not None else None
-            out_q: list = []
-            out_i: list = []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                for cid, grp in pdf.groupby("centroid_id"):
-                    qidx = cq.get(int(cid))
-                    if not qidx:
-                        continue
-                    ids = grp[id_col].to_numpy(dtype=np.int64)
-                    raw = np.frombuffer(b"".join(grp["code"]), dtype=np.uint8)
-                    Cc = raw.reshape(len(ids), m_)
-                    resid = grp["resid"].to_numpy(dtype=np.float64)
-                    cols = np.arange(m_)[None, :]
-                    for qi in qidx:
-                        q = Qs_[qi]
-                        if CM is not None:
-                            q = q - CM[int(cid)]
-                        lut = _adc_lut(q, B)
-                        # ADC: d̂ = Σ_j lut[j, code_j] — m lookups/vector
-                        d_adc = lut[cols, Cc].sum(axis=1)
-                        np.maximum(d_adc, 0.0, out=d_adc)
-                        if candidates_per_partition is not None:
-                            keep_n = min(
-                                max(candidates_per_partition, k), len(ids)
-                            )
-                            part = np.argpartition(d_adc, keep_n - 1)[:keep_n]
-                            kept = ids[part]
-                        else:
-                            kept = ids[bound_cut_mask(d_adc, resid, k)]
-                        out_q.append(
-                            np.full(len(kept), qids_[qi], dtype=np.int64)
-                        )
-                        out_i.append(kept)
-            if out_i:
-                yield pd.DataFrame(
-                    {
-                        "qid": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_i),
-                    }
+            cm = self.center_map(snap) if residual else None
+            if opq:
+                # OPQ: codes live in rotated space; rotating BOTH the
+                # queries and the center map keeps the per-(query, cell)
+                # LUT math identical ((q − c)·R = q·R − c·R).  The rescore
+                # uses the UNrotated base — distances are rotation-
+                # invariant, so results match the plain tier exactly.
+                R = np.load(
+                    os.path.join(os.path.dirname(codes_dir), "rotation.npy")
                 )
-
-        cand = cand_codes.mapInPandas(
-            adc_cut, schema="qid long, neighbor_id long"
-        )
-        base = self.vectors(snapshot=snap).filter(
-            F.col("centroid_id").isin(needed)
-        )
-        from vector_search_engine_spark.operators.knn import _queries_df
-
-        qdf = _queries_df(spark, queries, qids, Q, qid_col, qvec_col)
-        from vector_search_engine_spark.functions.vector import l2_sq
-
-        rescored = (
-            cand.join(
-                base.select(F.col(id_col).alias("neighbor_id"), vec_col),
-                "neighbor_id",
+                Q = Q @ R
+                if cm is not None:
+                    cm = {cid: c @ R for cid, c in cm.items()}
+            return _TierScan(
+                codes_dir, ("code", "resid"), decode, adc_cut, (Q, books, cm),
+                exact=False,
             )
-            .join(F.broadcast(qdf), "qid")
-            .select(
-                "qid",
-                "neighbor_id",
-                l2_sq(F.col(vec_col), F.col(qvec_col)).alias("dist"),
-            )
+
+        return self._probed_search(
+            queries, k, nprobe, qid_col, qvec_col, exclude_ids, predicate,
+            snapshot, round_output, tier,
         )
-        return _finalize_topk(rescored, k, "l2_sq", round_output)
 
     def radius_search(
         self,
@@ -4910,53 +4643,45 @@ def _build_or_construct(
     return inst
 
 
+# The serving tiers — the one table behind ``VectorEngine.search`` and the
+# metric wrappers below: tier → (IVFIndex method, its keyword arguments
+# given the shared per-cell candidate budget C).  Graph maps C onto its
+# beam width ``ef`` (unbounded C → exhaustive beam → exact).
+_SEARCH_TIERS: dict[str, tuple[str, Callable[[int | None], dict]]] = {
+    "float": ("search", lambda c: {}),
+    "sq8": ("search_sq8", lambda c: {"bits": 8}),
+    "sq4": ("search_sq8", lambda c: {"bits": 4}),
+    "pq": ("search_pq", lambda c: {}),
+    "bq": ("search_bq", lambda c: {"candidates_per_cell": c}),
+    "prefix": ("search_prefix", lambda c: {}),
+    "prefix_pca": ("search_prefix_pca", lambda c: {}),
+    "cascade": ("search_cascade", lambda c: {"candidates_per_cell": c}),
+    "graph": ("search_graph", lambda c: {"ef": c or 64}),
+}
+
+
 def _tier_candidates(
     index: "IVFIndex",
-    queries_tuple,
+    queries,
     k: int,
     nprobe: int,
     predicate,
     tier: str,
     candidates_per_cell: int | None,
+    **kwargs,
 ) -> DataFrame:
-    """Candidate generation for the metric wrappers below through any of
-    the index's serving tiers.  Every tier is exact-equivalent to the
-    float probe at full probe (lossless cuts, or unbounded top-C for
-    BQ/cascade), so the wrapper's exact metric rescore — and therefore
-    the shared oracle — holds tier-independently."""
-    if tier == "float":
-        return index.search(queries_tuple, k=k, nprobe=nprobe, predicate=predicate)
-    if tier in ("sq8", "sq4"):
-        return index.search_sq8(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate,
-            bits=4 if tier == "sq4" else 8,
-        )
-    if tier == "pq":
-        return index.search_pq(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate
-        )
-    if tier == "bq":
-        return index.search_bq(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate,
-            candidates_per_cell=candidates_per_cell,
-        )
-    if tier == "prefix":
-        return index.search_prefix(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate
-        )
-    if tier == "cascade":
-        return index.search_cascade(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate,
-            candidates_per_cell=candidates_per_cell,
-        )
-    if tier == "graph":
-        # the graph tier's serving budget is the beam width: map the
-        # shared C knob onto ef (unbounded C → exhaustive beam → exact)
-        return index.search_graph(
-            queries_tuple, k=k, nprobe=nprobe, predicate=predicate,
-            ef=candidates_per_cell or 64,
-        )
-    raise ValueError(f"unknown tier {tier!r}")
+    """One probed search through any serving tier of ``_SEARCH_TIERS``
+    (``kwargs``: e.g. ``exclude_ids``, ``round_output``).  Every tier is
+    exact-equivalent to the float probe at full probe (lossless cuts, or
+    unbounded top-C for BQ/cascade), so the metric wrappers' exact
+    rescore — and therefore the shared oracle — holds tier-independently."""
+    if tier not in _SEARCH_TIERS:
+        raise ValueError(f"unknown tier {tier!r}")
+    method, tier_kwargs = _SEARCH_TIERS[tier]
+    return getattr(index, method)(
+        queries, k=k, nprobe=nprobe, predicate=predicate,
+        **tier_kwargs(candidates_per_cell), **kwargs,
+    )
 
 
 def search_cosine(

@@ -39,7 +39,11 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vector_search_engine_spark.operators.ivf import IVFIndex
+from vector_search_engine_spark.operators.ivf import (
+    _SEARCH_TIERS,
+    IVFIndex,
+    _tier_candidates,
+)
 from vector_search_engine_spark.operators.knn import (
     _finalize_topk,
     knn_exact,
@@ -415,12 +419,13 @@ class VectorEngine:
         (nibble-packed 16-level codes, ~8× fewer), ``"pq"``
         (IVFADC byte codes, ~32× fewer), ``"bq"`` (packed sign bits, 32×
         fewer), ``"prefix"`` (full bytes, ~d/d′× fewer FLOPs via the
-        lossless prefix-dimension cut), ``"cascade"`` (staged BQ →
+        lossless prefix-dimension cut), ``"prefix_pca"`` (the same cut in
+        a PCA-rotated basis), ``"cascade"`` (staged BQ →
         SQ8 → float — ivf.search_cascade), or ``"graph"`` (per-cell HNSW
         walk — the reference's own beam search, ivf.search_graph, with
         ``candidates_per_cell`` mapped onto the beam width ``ef``;
         exhaustive — hence exact at full probe — when unbounded).
-        SQ8/SQ4/PQ/prefix run lossless cuts + exact re-score — same
+        SQ8/SQ4/PQ/prefix/prefix_pca run lossless cuts — same
         results as the float tier; BQ's top-C cut and graph's finite-ef
         beam have no lossless bound (recall measured, tests/test_bq.py /
         tests/test_hnsw.py) though returned distances are always exact.
@@ -430,10 +435,7 @@ class VectorEngine:
         the fixed 8·k default collapsed recall on clustered corpora);
         an explicit value is the uniform per-cell serving knob.
         The delta side always scans exact floats, deltas are small."""
-        if tier not in (
-            "float", "sq8", "sq4", "pq", "bq", "prefix", "prefix_pca",
-            "cascade", "graph",
-        ):
+        if tier not in _SEARCH_TIERS:
             raise ValueError(f"unknown search tier {tier!r}")
         id_col = self.index.meta["id_col"]
         vec_col = self.index.meta["vec_col"]
@@ -442,93 +444,16 @@ class VectorEngine:
         # or compaction advances the delta mid-query
         delta_latest = self.delta_latest(seqs=self._live_seqs())
         # shadowed ids exclude via anti-join — the delta can be arbitrarily
-        # large under sustained ingest; ids never visit the driver
-        if tier == "pq":
-            indexed_part = self.index.search_pq(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier in ("sq8", "sq4"):
-            indexed_part = self.index.search_sq8(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                bits=4 if tier == "sq4" else 8,
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier == "bq":
-            indexed_part = self.index.search_bq(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                candidates_per_cell=candidates_per_cell,
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier == "prefix":
-            indexed_part = self.index.search_prefix(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier == "prefix_pca":
-            # the rotated-basis prefix cut (lossless, float32-storage
-            # error budgeted) inside the merged Q4 contract; shadowed
-            # ids leave pre-cut like every lossless tier
-            indexed_part = self.index.search_prefix_pca(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier == "cascade":
-            # staged BQ→SQ8→float serving inside the merged contract:
-            # exact at full probe with an unbounded stage-1 cut, like the
-            # standalone tier (ivf.search_cascade)
-            indexed_part = self.index.search_cascade(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                candidates_per_cell=candidates_per_cell,
-                predicate=predicate,
-                round_output=False,
-            )
-        elif tier == "graph":
-            # per-cell HNSW beam on the indexed side; shadowed ids leave
-            # AFTER the walk (removing nodes pre-walk would disconnect
-            # the graph) — with an exhaustive beam the post-exclusion is
-            # exact, same argument as the tier's predicate handling
-            indexed_part = self.index.search_graph(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                ef=candidates_per_cell or 64,
-                exclude_ids=delta_latest.select(id_col),
-                predicate=predicate,
-                round_output=False,
-            )
-        else:
-            indexed_part = self.index.search(
-                queries,
-                k=k,
-                nprobe=nprobe,
-                exclude_ids=delta_latest.select(id_col),
-                predicate=predicate,
-                round_output=False,
-            )
+        # large under sustained ingest; ids never visit the driver.  Every
+        # lossless tier drops them pre-cut; graph drops them AFTER the walk
+        # (removing nodes pre-walk would disconnect the graph) — exact with
+        # an exhaustive beam, same argument as its predicate handling
+        indexed_part = _tier_candidates(
+            self.index, queries, k, nprobe, predicate, tier,
+            candidates_per_cell,
+            exclude_ids=delta_latest.select(id_col),
+            round_output=False,
+        )
         # tombstones (NULL vector = deleted id) stay in delta_latest so
         # their ids keep shadowing the indexed side via the anti-join
         # above, but they carry nothing to scan
