@@ -550,9 +550,11 @@ class VectorEngine:
         side:
 
         * indexed side: ``IVFIndex.search_{,sq8_,cascade_}distributed``
-          (in-partition probe assignment + shuffle join on
-          ``centroid_id``, the quantized tiers reading 4×/32× fewer
-          scan bytes) with shadowed ids removed PRE-CUT by an anti-join
+          (in-partition probe assignment, then a scan of the cells on
+          ``centroid_id``: a shuffle join or a per-cell cogroup for the
+          float tier per ``scan``, a per-cell cogroup for sq8 and the
+          cascade, which read 4×/32× fewer scan bytes) with shadowed
+          ids removed PRE-CUT by an anti-join
           against the pinned delta snapshot's id set — the anti-join's
           build side is the delta (small by the compaction contract),
           so AQE broadcasts it;
